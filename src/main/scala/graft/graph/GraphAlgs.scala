@@ -1,18 +1,18 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 
 /** Iterative graph algorithms as DataFrame Pregel loops.
   *
-  * Shape shared by all three: state(vid, x) joined with the edge list,
+  * Shape shared by all of them: state(vid, x) joined with the edge list,
   * messages aggregated by dst, state updated — one shuffle per iteration,
   * keyed on vid throughout so a vid-bucketed graph never re-partitions.
-  * `localCheckpoint` every iteration truncates lineage (without it the
-  * plan doubles per iteration and Catalyst analysis dominates runtime);
-  * at cluster scale this becomes `checkpoint` to a reliable store every
-  * N iterations. Convergence checks are driver-side counts on the small
-  * changed-set, not collects of state.
+  * Each loop hands only its round (and, if it has one, its convergence
+  * probe) to [[Iterate]], the one place the checkpoint schedule — lineage
+  * cut, materialization, freeing the superseded round — is stated.
+  * Convergence checks are driver-side counts on the small changed-set,
+  * not collects of state.
   *
   * PageRank runs in scaled *integer* arithmetic (units of 1e-12): floor
   * division is bit-identical across Spark, DuckDB and any partition
@@ -38,51 +38,20 @@ object GraphAlgs {
     * with every division an integer floor division. */
   def pagerank(vertices: DataFrame, edges: DataFrame, iters: Int = 10): DataFrame = {
     val n = vertices.count()
-    val init = 1000000000000L / n
     pagerankFrom(vertices,
-      vertices.select(F.col("vid"), F.lit(init).as("pr")), edges, iters)
+      vertices.select(F.col("vid"), F.lit(1000000000000L / n).as("pr")), edges, iters, n)
   }
 
   /** The [[pagerank]] recurrence warm-started from an arbitrary rank
     * vector `pr0` (vid, pr in 1e-12 units) — the incremental-maintenance
     * entry: after an edge delta, a few rounds from the previous fixed
     * point re-converge instead of restarting from uniform (the recurrence
-    * is a contraction toward the same fixed point from any start). */
+    * is a contraction toward the same fixed point from any start).
+    * `n` is the caller's count of `vertices`. */
   def pagerankFrom(vertices: DataFrame, pr0: DataFrame, edges: DataFrame,
-                   iters: Int): DataFrame = {
-    val n = vertices.count()
-    val init = 1000000000000L / n
-    val base = (15L * init) / 100L
-    val outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).as("deg"))
-    // (src, dst, deg) — static across iterations; repartition by src so
-    // the captured partitioning makes every iteration's pr-join exchange
-    // only the rank side, never the edge list (see Pregel)
-    val withDeg = edges.select("src", "dst").join(outdeg, "src")
-      .repartition(F.col("src")).localCheckpoint()
-    var pr = pr0.select("vid", "pr")
-    val zeros = vertices.select(F.col("vid"), F.lit(0L).as("m")).localCheckpoint()
-    var prevCkpt: DataFrame = null
-    for (it <- 1 to iters) {
-      // messages ∪ a zero row per vertex, then ONE groupBy — replaces the
-      // groupBy(dst) + left-join(vertices) pair (two shuffles → one; the
-      // zero rows also restore dangling vertices' base rank)
-      val msgs = withDeg
-        .join(pr, withDeg("src") === pr("vid"))
-        .select(F.col("dst").as("vid"), F.expr("pr div deg").as("m"))
-      pr = zeros.unionByName(msgs)
-        .groupBy("vid").agg(F.sum("m").as("m"))
-        .select(F.col("vid"), (F.lit(base) + F.expr("(85 * m) div 100")).as("pr"))
-      // truncate lineage every 2nd iteration (and at the end): plans stay
-      // shallow while halving the materialization barriers; each eager
-      // checkpoint supersedes the previous one's blocks
-      if (it % 2 == 0 || it == iters) {
-        pr = pr.localCheckpoint()
-        if (prevCkpt != null) CheckpointGC.unpersist(prevCkpt)
-        prevCkpt = pr
-      }
-    }
-    pr
-  }
+                   iters: Int, n: Long): DataFrame =
+    rankRounds(vertices, pr0, edges, iters,
+      F.lit((15L * (1000000000000L / n)) / 100L))
 
   /** Personalized PageRank: teleport mass returns to `srcVid` only —
     * pr0 = 1e12·e_src; pr'(v) = [v = src]·(15·1e12)/100 + (85·Σ_in pr(u)
@@ -92,29 +61,36 @@ object GraphAlgs {
   def personalizedPagerank(vertices: DataFrame, edges: DataFrame, srcVid: Long,
                            iters: Int = 10): DataFrame = {
     val init = 1000000000000L
-    val base = (15L * init) / 100L
+    rankRounds(vertices,
+      vertices.select(F.col("vid"),
+        F.when(F.col("vid") === srcVid, init).otherwise(0L).as("pr")),
+      edges, iters,
+      F.when(F.col("vid") === srcVid, (15L * init) / 100L).otherwise(0L))
+  }
+
+  /** The integer rank recurrence pr'(v) = base(v) + (85·Σ_in pr(u) div
+    * deg(u)) div 100 from `pr0`; `base` is the teleport term, a column
+    * over vid. */
+  private def rankRounds(vertices: DataFrame, pr0: DataFrame, edges: DataFrame,
+                         iters: Int, base: Column): DataFrame = {
     val outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).as("deg"))
+    // (src, dst, deg) — static across iterations; repartition by src so
+    // the captured partitioning makes every iteration's pr-join exchange
+    // only the rank side, never the edge list (see Pregel)
     val withDeg = edges.select("src", "dst").join(outdeg, "src")
       .repartition(F.col("src")).localCheckpoint()
-    var pr = vertices.select(F.col("vid"),
-      F.when(F.col("vid") === srcVid, init).otherwise(0L).as("pr"))
     val zeros = vertices.select(F.col("vid"), F.lit(0L).as("m")).localCheckpoint()
-    val baseOf = F.when(F.col("vid") === srcVid, base).otherwise(0L)
-    var prevCkpt: DataFrame = null
-    for (it <- 1 to iters) {
+    Iterate.fixed(pr0.select("vid", "pr"), iters, ownsInit = false) { pr =>
+      // messages ∪ a zero row per vertex, then ONE groupBy — replaces the
+      // groupBy(dst) + left-join(vertices) pair (two shuffles → one; the
+      // zero rows also restore dangling vertices' base rank)
       val msgs = withDeg
         .join(pr, withDeg("src") === pr("vid"))
         .select(F.col("dst").as("vid"), F.expr("pr div deg").as("m"))
-      pr = zeros.unionByName(msgs)
+      zeros.unionByName(msgs)
         .groupBy("vid").agg(F.sum("m").as("m"))
-        .select(F.col("vid"), (baseOf + F.expr("(85 * m) div 100")).as("pr"))
-      if (it % 2 == 0 || it == iters) {
-        pr = pr.localCheckpoint()
-        if (prevCkpt != null) CheckpointGC.unpersist(prevCkpt)
-        prevCkpt = pr
-      }
+        .select(F.col("vid"), (base + F.expr("(85 * m) div 100")).as("pr"))
     }
-    pr
   }
 
   /** BFS hop count from `sourceVid` over an undirected edge list;
@@ -211,10 +187,9 @@ object GraphAlgs {
     // src-partitioned once: each round's edge⋈labels join reuses it and
     // exchanges only the label side (see Pregel)
     val undirected = undirected0.repartition(F.col("src")).localCheckpoint()
-    var labels = vertices.select(F.col("vid"), F.col("vid").as("lbl"))
+    val labels0 = vertices.select(F.col("vid"), F.col("vid").as("lbl"))
       .localCheckpoint()
-    var prevCkpt = labels
-    for (it <- 1 to iters) {
+    Iterate.fixed(labels0, iters, ownsInit = true) { labels =>
       // most-frequent neighbor label, ties to smallest: max on the
       // (count, -lbl) struct — a second partial-aggregatable groupBy
       // instead of a window (drops the per-iteration window SORT; vids
@@ -225,18 +200,10 @@ object GraphAlgs {
         .groupBy("vid")
         .agg(F.max(F.struct(F.col("c"), (-F.col("lbl")).as("nl"))).as("t"))
         .select(F.col("vid"), (-F.col("t.nl")).as("new_lbl"))
-      labels = labels
+      labels
         .join(top, Seq("vid"), "left")
         .select(F.col("vid"), F.coalesce(F.col("new_lbl"), F.col("lbl")).as("lbl"))
-      // truncate lineage every 2nd round (and at the end) — plans stay
-      // shallow at half the materialization barriers (see pagerank)
-      if (it % 2 == 0 || it == iters) {
-        labels = labels.localCheckpoint()
-        if (prevCkpt != null) CheckpointGC.unpersist(prevCkpt)
-        prevCkpt = labels
-      }
     }
-    labels
   }
 
   /** k-core: `rounds` synchronous peeling rounds — each round drops every
@@ -253,31 +220,20 @@ object GraphAlgs {
             rounds: Int = 10): DataFrame = {
     val edges = undirected0.select("src", "dst")
       .repartition(F.col("src")).localCheckpoint()
-    var surv = vertices.select("vid").localCheckpoint()
-    var prevSurv = surv
-    var prev = surv.count()
-    var done = false
-    for (_ <- 1 to rounds if !done) {
+    val surv0 = vertices.select("vid").localCheckpoint()
+    // early exit: a round that drops nobody leaves every degree
+    // unchanged, so all remaining rounds are no-ops — the result is
+    // identical to running the full fixed-round schedule
+    Iterate.probed(surv0, rounds) { (surv, _) =>
       // alive edge = both endpoints survive; degree = alive out-edges per
       // src (the symmetric list counts each undirected edge at both ends)
-      surv = edges
+      edges
         .join(surv.select(F.col("vid").as("src")), "src", "left_semi")
         .join(surv.select(F.col("vid").as("dst")), "dst", "left_semi")
         .groupBy(F.col("src").as("vid")).agg(F.count(F.lit(1)).as("deg"))
         .filter(F.col("deg") >= k)
         .select("vid")
-        .localCheckpoint(false)
-      // the count doubles as the materialization probe (see Pregel) AND
-      // the early exit: a round that drops nobody leaves every degree
-      // unchanged, so all remaining rounds are no-ops — the result is
-      // identical to running the full fixed-round schedule
-      val c = surv.count()
-      CheckpointGC.unpersist(prevSurv) // superseded by the new survivors
-      prevSurv = surv
-      done = c == prev
-      prev = c
-    }
-    surv
+    }(Iterate.unchanged(surv0)(_.count()))
   }
 
   /** Full k-core DECOMPOSITION — coreness number per vertex — by the
@@ -296,31 +252,21 @@ object GraphAlgs {
     import org.apache.spark.sql.expressions.Window
     val edges = undirected0.select("src", "dst")
       .repartition(F.col("src")).localCheckpoint()
-    var c = edges.groupBy(F.col("src").as("vid"))
+    val c0 = edges.groupBy(F.col("src").as("vid"))
       .agg(F.count(F.lit(1)).as("c"))
       .localCheckpoint()
-    var prevCkpt = c
-    var prevSum = c.agg(F.sum("c")).head().getLong(0)
-    var done = false
-    for (_ <- 1 to rounds if !done) {
+    // values are non-increasing, so equal sums = no change
+    val c = Iterate.probed(c0, rounds) { (prev, _) =>
       val nbr = edges
-        .join(c.select(F.col("vid").as("dst"), F.col("c").as("cu")), "dst")
+        .join(prev.select(F.col("vid").as("dst"), F.col("c").as("cu")), "dst")
         .select(F.col("src").as("vid"), F.col("cu"))
       val w = Window.partitionBy("vid").orderBy(F.col("cu").desc)
       val h = nbr
         .select(F.col("vid"), F.least(F.col("cu"), F.row_number().over(w)).as("m"))
         .groupBy("vid").agg(F.max("m").cast("long").as("h"))
-      c = c.join(h, Seq("vid"))
+      prev.join(h, Seq("vid"))
         .select(F.col("vid"), F.least(F.col("c"), F.col("h")).as("c"))
-        .localCheckpoint(false)
-      // one job: the sum materializes the checkpoint AND probes the
-      // fixpoint (values are non-increasing, so equal sums = no change)
-      val s = c.agg(F.sum("c")).head().getLong(0)
-      CheckpointGC.unpersist(prevCkpt)
-      prevCkpt = c
-      done = s == prevSum
-      prevSum = s
-    }
+    }(Iterate.unchanged(c0)(_.agg(F.sum("c")).head().getLong(0)))
     // isolated vertices (none in this graph's model, but the API
     // shouldn't lose them) have coreness 0
     vertices.select("vid").join(c, Seq("vid"), "left")
@@ -372,37 +318,33 @@ object GraphAlgs {
     val mask0 = lms.zipWithIndex.foldLeft(F.lit(0L)) { case (acc, (v, i)) =>
       F.when(F.col("vid") === v, F.lit(1L << i)).otherwise(acc)
     }
-    var state = vertices.select(F.col("vid"), mask0.as("mask"),
+    val state0 = vertices.select(F.col("vid"), mask0.as("mask"),
       F.lit(0L).as("h6"), F.lit(0L).as("ecc"), F.lit(0L).as("nr"))
       .localCheckpoint()
-    var prevCkpt = state
-    var frontier = state.filter(F.col("mask") =!= 0L).select("vid", "mask")
-    var done = false
-    var r = 0
-    while (!done && r < maxIter) {
-      r += 1
+    // each round's checkpoint holds the round's tallies and nb = the
+    // landmark bits new this round; the state is a projection of it
+    def stateOf(joined: DataFrame): DataFrame = joined.select(F.col("vid"),
+      F.col("mask").bitwiseOR(F.col("nb")).as("mask"), F.col("h6"), F.col("ecc"), F.col("nr"))
+    val last = Iterate.probed(state0, maxIter) { (prev, r) =>
+      val (state, frontier) =
+        if (r == 1) (prev, prev.filter(F.col("mask") =!= 0L).select("vid", "mask"))
+        else {
+          val st = stateOf(prev)
+          (st, st.join(prev.filter(F.col("nb") =!= 0L).select("vid"), "vid", "left_semi")
+            .select("vid", "mask"))
+        }
       val contrib = 1000000L / r // this round's per-new-landmark harmonic term
       val cand = edges.join(frontier, edges("src") === frontier("vid"))
         .select(F.col("dst").as("vid"), F.col("mask").as("m"))
         .groupBy("vid").agg(F.expr("bit_or(m)").as("inm"))
-      val joined = state.join(cand, Seq("vid"), "left")
-        .select(F.col("vid"), F.col("mask"), F.col("h6"), F.col("ecc"), F.col("nr"),
-          (F.coalesce(F.col("inm"), F.lit(0L)).bitwiseAND(F.expr("~mask"))).as("nb"))
-        .localCheckpoint(false)
-      state = joined.select(F.col("vid"),
-        F.col("mask").bitwiseOR(F.col("nb")).as("mask"),
-        (F.col("h6") + F.expr("bit_count(nb)") * contrib).as("h6"),
-        F.when(F.col("nb") =!= 0L, r.toLong).otherwise(F.col("ecc")).as("ecc"),
-        (F.col("nr") + F.expr("bit_count(nb)")).as("nr"))
-      frontier = state.join(
-        joined.filter(F.col("nb") =!= 0L).select("vid"), "vid", "left_semi")
-        .select("vid", "mask")
-      // one job per round: the convergence count also materializes the
-      // lazy checkpoint (same pattern as Pregel.minPropagate)
-      done = joined.filter(F.col("nb") =!= 0L).count() == 0L
-      CheckpointGC.unpersist(prevCkpt) // superseded by joined's blocks
-      prevCkpt = joined
-    }
+      state.join(cand, Seq("vid"), "left")
+        .withColumn("nb", F.coalesce(F.col("inm"), F.lit(0L)).bitwiseAND(F.expr("~mask")))
+        .select(F.col("vid"), F.col("mask"),
+          (F.col("h6") + F.expr("bit_count(nb)") * contrib).as("h6"),
+          F.when(F.col("nb") =!= 0L, r.toLong).otherwise(F.col("ecc")).as("ecc"),
+          (F.col("nr") + F.expr("bit_count(nb)")).as("nr"), F.col("nb"))
+    }(_.filter(F.col("nb") =!= 0L).count() == 0L)
+    val state = if (last eq state0) state0 else stateOf(last)
     state.select(F.col("vid"), F.col("h6"), F.col("ecc"), F.col("nr").as("nreach"))
   }
 
@@ -478,12 +420,10 @@ object GraphAlgs {
     * surviving oriented edges (a, b). */
   def kTruss(undirected0: DataFrame, k: Int, rounds: Int = 5): DataFrame = {
     require(k >= 3, "k-truss needs k >= 3")
-    var edges = undirected0.filter(F.col("src") < F.col("dst"))
+    val edges0 = undirected0.filter(F.col("src") < F.col("dst"))
       .select(F.col("src").as("a"), F.col("dst").as("b"))
       .localCheckpoint()
-    var prev = edges.count()
-    var done = false
-    for (_ <- 1 to rounds if !done) {
+    Iterate.probed(edges0, rounds) { (edges, _) =>
       val tri = edges
         .join(edges.select(F.col("a").as("b2"), F.col("b").as("c")),
           F.col("b") === F.col("b2"))
@@ -494,18 +434,11 @@ object GraphAlgs {
         .unionByName(tri.select(F.col("a").as("x"), F.col("c").as("y")))
         .unionByName(tri.select(F.col("b").as("x"), F.col("c").as("y")))
         .groupBy("x", "y").agg(F.count(F.lit(1)).as("sup"))
-      val prevEdges = edges
-      edges = edges
+      edges
         .join(support, F.col("a") === F.col("x") && F.col("b") === F.col("y"))
         .filter(F.col("sup") >= k - 2)
         .select("a", "b")
-        .localCheckpoint(false)
-      val c = edges.count()
-      CheckpointGC.unpersist(prevEdges) // superseded by the new survivors
-      done = c == prev
-      prev = c
-    }
-    edges
+    }(Iterate.unchanged(edges0)(_.count()))
   }
 
   /** Strongly connected components over the DIRECTED edge list — the

@@ -184,7 +184,9 @@ final class Traversal private (
     // the start set from the global composite index (JanusGraph's
     // graphindex) once all of them are known; resolved by
     // [[resolvedStart]] on the first frame-consuming step
-    private val pendStart: Option[Vector[(String, Traversal.P)]] = None) {
+    private val pendStart: Option[Vector[(String, Traversal.P)]] = None,
+    // salt buckets of every later kv-keyed hop ([[saltedHops]]; 0 = plain join)
+    private val saltBuckets: Int = 0) {
 
   import Traversal.{P, HopStep, OutStep, InStep, BothStep}
 
@@ -222,10 +224,11 @@ final class Traversal private (
                    edgeArrow: String = edgeArrow,
                    pendEdge: Option[(Seq[String], Vector[(String, P)])] = pendEdge,
                    projected: Boolean = projected,
-                   pendStart: Option[Vector[(String, P)]] = pendStart): Traversal =
+                   pendStart: Option[Vector[(String, P)]] = pendStart,
+                   saltBuckets: Int = saltBuckets): Traversal =
     new Traversal(g, frame, depth, onVertices, vals, marks, originName,
       pendFilters, pendTaps, edge, hopEdges, edgeArrow, pendEdge, projected,
-      pendStart)
+      pendStart, saltBuckets)
 
   /** User-supplied names (as() marks, value() taps) must not collide
     * with the traversal's own column machinery: the internal hop chain
@@ -473,15 +476,12 @@ final class Traversal private (
     // SUPERNODE-SAFE variant (KVGraphQueries.saltedHop's contract, wired
     // into the DSL): all of a hub vertex's cells share ONE store key, so
     // a key-partitioned hop puts the whole celebrity adjacency in one
-    // task. With spark.graft.hop.saltBuckets = b > 0, the adjacency side
+    // task. With saltBuckets = b > 0 ([[saltedHops]]), the adjacency side
     // fans out over (key, salt = xxhash64(dst) % b) — each cell has a
     // unique dst, so a hub's cells spread EVENLY over b reducers — and
     // the (small) frontier replicates b times. Identical rows to the
     // plain join (SaltedJoin's contract; the salt is deterministic, never
-    // rand()). Off by default; a caller whose frontier hits hub-degree
-    // keys turns it on around the hop (g_kv_dsl_rev's nation frontier).
-    def saltBuckets: Int =
-      g.edges.sparkSession.conf.get("spark.graft.hop.saltBuckets", "0").toInt
+    // rand()).
     def kvJoin(left: DataFrame, keyName: String): DataFrame = {
       val b = saltBuckets
       if (b > 0) {
@@ -526,6 +526,16 @@ final class Traversal private (
           .select(((t.chain :+ nxt).map(F.col) ++ t.vals.map(F.col)): _*)
     t.step(frame = joined, depth = t.depth + 1, onVertices = false,
       hopEdges = t.hopEdges :+ arrow)
+  }
+
+  /** Salt every later kv-keyed hop of THIS traversal over `buckets`
+    * reducers (0 = the plain key-partitioned join) — the supernode-safe
+    * hop for a frontier that hits hub-degree store keys (g_kv_dsl_rev's
+    * nation frontier). Identical rows either way; the setting rides the
+    * traversal, so no other query on the session sees it. */
+  def saltedHops(buckets: Int): Traversal = {
+    require(buckets >= 0, s"salt buckets must be >= 0, got $buckets")
+    step(saltBuckets = buckets)
   }
 
   /** out()/out(label…): one hop along out-edges. */

@@ -307,16 +307,10 @@ object KVQueries {
       .option("maxSeqsPerBatch", "1")
       .load(s"$wh/events")
       .writeStream
-      // maxSeqsPerBatch=1: every micro-batch is exactly ONE source log
-      // part, so the cross-part foldCdc rank window (a full shuffle+sort
-      // of the store per batch) is unnecessary — the batch passes through
-      // as mutations and the replica's own merge-on-read applies the
-      // identical same-seq resolution (op desc: addition beats deletion),
-      // so the resolved replica is cell-for-cell the same (oracle-gated).
+      // maxSeqsPerBatch=1: every micro-batch is ONE source log part, so
+      // applyCdcBatch passes it through without the cross-part fold
       .foreachBatch((batch: DataFrame, batchId: Long) =>
-        KVStreamSink.applyBatchDelta(
-          batch.select(F.col("k"), F.col("c"), F.col("v"),
-            (F.col("op") === 0).as("is_delete")), wh, "replica", batchId))
+        KVStreamSink.applyCdcBatch(batch, wh, "replica", batchId))
       .option("checkpointLocation", s"$wh/repl_ckpt")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()

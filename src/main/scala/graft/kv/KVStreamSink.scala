@@ -149,6 +149,25 @@ object KVStreamSink {
         (F.col("op") === 0).as("is_delete"))
   }
 
+  /** Apply one graft-kv-log CDC micro-batch to the delta-mode replica
+    * `name`. A batch holding ONE log seq passes straight through as
+    * mutations — the replica's merge-on-read applies the identical
+    * same-seq resolution (op desc: addition beats deletion), so the rank
+    * window of [[foldCdc]] (a shuffle + sort of the batch) is skipped. A
+    * batch spanning several seqs is folded first; checked with one
+    * min/max(seq) aggregate, since the source's batch boundaries are its
+    * admission control's business, not this sink's. */
+  def applyCdcBatch(batch: DataFrame, warehouseDir: String, name: String,
+                    batchId: Long): Unit = {
+    val span = batch.agg(F.min("seq"), F.max("seq")).head()
+    val muts =
+      if (span.isNullAt(0) || span.getLong(0) == span.getLong(1))
+        batch.select(F.col("k"), F.col("c"), F.col("v"),
+          (F.col("op") === 0).as("is_delete"))
+      else foldCdc(batch)
+    applyBatchDelta(muts, warehouseDir, name, batchId)
+  }
+
   private def hwmFile(warehouseDir: String, name: String): String =
     GraftFs.child(GraftFs.child(warehouseDir, name), "_stream_hwm")
 

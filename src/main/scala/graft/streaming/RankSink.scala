@@ -67,7 +67,7 @@ object RankSink {
           RefreshIters)
       case None => (vertices.select(F.col("vid"), F.lit(init).as("pr")), ColdIters)
     }
-    GraphAlgs.pagerankFrom(vertices, pr0, edges.select("src", "dst"), iters)
+    GraphAlgs.pagerankFrom(vertices, pr0, edges.select("src", "dst"), iters, n)
       .write.mode("overwrite").parquet(target)
   }
 

@@ -44,24 +44,19 @@ class GraphSpec extends SparkSpec {
     assert(arrival == Map(1L -> 0L, 2L -> 5L, 3L -> 9L, 10L -> 12L))
   }
 
-  test("Pregel unroll=2 reaches the identical fixpoint (flag is plan-only)") {
+  test("Pregel reaches the fixpoint on a path plus a shortcut") {
     import spark.implicits._
-    // a 6-hop path plus a shortcut: odd round count, so the fused final
-    // round runs once as a no-op — the convergence probe must still fire
+    // a 6-hop path plus a shortcut: the shortcut's distances must win
     val vs = (1L to 7L).toDF("vid")
     val es = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L), (1L, 4L))
       .toDF("src", "dst")
     val INF = Int.MaxValue.toLong
-    def run(): Map[Long, Long] = Pregel.minPropagate(
+    val d = Pregel.minPropagate(
       vs.select(F.col("vid"), F.when(F.col("vid") === 1L, 0L).otherwise(INF).as("x")),
       _.filter(F.col("x") < INF), es, F.col("x") + 1L, 10)
       .filter(F.col("x") < INF)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val plain = run()
-    spark.conf.set("spark.graft.pregel.unroll", "2")
-    try assert(run() == plain)
-    finally spark.conf.unset("spark.graft.pregel.unroll")
-    assert(plain == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 1L,
+    assert(d == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 1L,
       5L -> 2L, 6L -> 3L, 7L -> 4L))
   }
 
@@ -198,6 +193,35 @@ class GraphSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // symmetric 3-cycle: stationary = uniform = 1e12/3 (up to floor error)
     pr.values.foreach(v => assert(math.abs(v - 333333333333L) < 100L, pr))
+  }
+
+  test("a loop's checkpoint footprint does not grow with its round count") {
+    import spark.implicits._
+    // a 30-vertex path: cc, sssp and 2-core peeling (one vertex off each
+    // end per round) all still change at round 12, so every budget runs
+    val n = 30L
+    val vs = (1L to n).toDF("vid")
+    val path = (1L until n).map(i => (i, i + 1))
+    val und = (path ++ path.map(_.swap)).toDF("src", "dst")
+    // checkpoints a run leaves persisted: its static inputs and its result,
+    // never one per round
+    def footprint(run: Int => DataFrame, rounds: Int): Int = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val out = run(rounds)
+      val grown = spark.sparkContext.getPersistentRDDs.keys.count(!before(_))
+      assert(out.columns.nonEmpty) // keeps the result reachable until here
+      grown
+    }
+    val loops = Seq[(String, Int => DataFrame)](
+      "cc" -> (r => GraphAlgs.connectedComponents(vs, und, maxIter = r)),
+      "sssp" -> (r => GraphAlgs.sssp(vs, und, 1L, maxIter = r)),
+      "pagerank" -> (r => GraphAlgs.pagerank(vs, und, iters = r)),
+      "kCore" -> (r => GraphAlgs.kCore(vs, und, k = 2, rounds = r)))
+    loops.foreach { case (name, run) =>
+      val small = footprint(run, 2)
+      val large = footprint(run, 12)
+      assert(large <= small, s"$name: 12 rounds leave $large checkpoints, 2 rounds $small")
+    }
   }
 
   test("shortest-path tree paths are valid minimal walks with min-vid predecessors") {

@@ -135,6 +135,22 @@ class KVLogSourceSpec extends SparkSpec {
     assert(replica == primary, s"replica $replica != primary $primary")
   }
 
+  test("a two-seq CDC batch through applyCdcBatch does not resurrect a deleted cell") {
+    import graft.kv.KVStreamSink
+    // one batch spanning seq 1 (key 0..4 added) and seq 2 (key 0
+    // deleted): passed through under one replica seq, the add would win
+    val wh = Files.createTempDirectory("graft_kvlog8").toString
+    val adds = cells(0, 5).select(F.lit(1L).as("seq"), F.col("k"), F.col("c"),
+      F.col("v"), F.lit(1L).as("wts"), F.lit(1).as("op"))
+    val dels = cells(0, 1).select(F.lit(2L).as("seq"), F.col("k"), F.col("c"),
+      F.lit(null).cast("binary").as("v"), F.lit(2L).as("wts"), F.lit(0).as("op"))
+    KVStreamSink.applyCdcBatch(adds.unionByName(dels), wh, "r", 0L)
+    def be(b: Array[Byte]): Long = java.nio.ByteBuffer.wrap(b).getLong
+    val replica = KVStreamSink.readDelta(spark, wh, "r").collect()
+      .map(r => be(r.getAs[Array[Byte]]("k"))).toSet
+    assert(replica == Set(1L, 2L, 3L, 4L), s"replica $replica")
+  }
+
   test("startingSeq skips history for a NEW consumer; checkpoints still win") {
     val wh = Files.createTempDirectory("graft_kvlog5").toString
     val ds = new KVDeltaStore(spark, wh)
